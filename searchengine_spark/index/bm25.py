@@ -18,6 +18,11 @@ Query plan shape (at any scale):
       ⋈ broadcast(idf for the terms)  <- tiny dim
       ⋈ doc_lengths on doc_id         <- shuffle or broadcast (AQE)
       -> score expr -> groupBy(doc_id).sum -> TakeOrderedAndProject(k)
+
+A serving index (serve.py) carries the score expression precomputed
+per (word, doc_id) in ``impacts``, cached hash-partitioned by doc_id,
+so a default-parameter query there is filter -> per-doc sum -> top-k
+with no join and no exchange.
 """
 
 from __future__ import annotations
@@ -130,6 +135,59 @@ def rank_bm25_idf_table(index: InvertedIndex, *, epsilon: float = RANK_BM25_EPSI
     )
 
 
+IDF_VARIANTS = ("log10", "okapi", "rank_bm25")
+
+
+def _check_idf_variant(idf_variant: str) -> None:
+    if idf_variant not in IDF_VARIANTS:
+        raise ValueError(
+            f"unknown idf_variant {idf_variant!r}; expected 'log10', "
+            "'okapi' or 'rank_bm25'"
+        )
+
+
+def term_scores(
+    index: InvertedIndex,
+    k1: float = K1_DEFAULT,
+    b: float = B_DEFAULT,
+    idf_variant: str = "log10",
+) -> DataFrame:
+    """(word, doc_id, term_score): the BM25 contribution of every
+    posting — the one scoring definition that search(), the serving
+    layout's impact table (serve.py) and MaxScore share.
+
+    Lazy over the whole vocabulary; callers filter on ``word`` and
+    Catalyst pushes that filter into the tf scan and, through the join
+    key, into the idf side. rank_bm25's ε-floor mean is its own
+    aggregate branch, so it still spans the FULL vocabulary."""
+    _check_idf_variant(idf_variant)
+    if idf_variant == "rank_bm25":
+        idf = rank_bm25_idf_table(index)
+    elif idf_variant == "okapi":
+        idf = index.idf_values.crossJoin(
+            F.broadcast(index.scoring_params.select("n_docs"))
+        ).select("word", okapi_idf(F.col("n_docs"), F.col("doc_freq")).alias("idf"))
+    else:
+        idf = index.idf_values.select("word", "idf")
+    return (
+        index.term_frequencies.join(F.broadcast(idf), "word")
+        .join(index.doc_lengths, "doc_id")
+        .crossJoin(F.broadcast(index.scoring_params.select("avgdl")))
+        .select(
+            "word",
+            "doc_id",
+            bm25_term_score(
+                F.col("term_freq"),
+                F.col("doc_length"),
+                F.col("avgdl"),
+                F.col("idf"),
+                k1=k1,
+                b=b,
+            ).alias("term_score"),
+        )
+    )
+
+
 def search(
     index: InvertedIndex,
     query: str | list[str],
@@ -144,12 +202,13 @@ def search(
 
     Deterministic tie-break on doc_id (the reference leaves ties to
     partition order; SURVEY.md FIXTURES §4 flags this).
+
+    Scores come from the index's precomputed ``impacts`` when it has
+    them and the call uses the parameters they were computed with
+    (k1=1.2, b=0.75, log10 idf); any other call scores lazily from
+    term_scores(). Both sum the same per-term expression per doc.
     """
-    if idf_variant not in ("log10", "okapi", "rank_bm25"):
-        raise ValueError(
-            f"unknown idf_variant {idf_variant!r}; expected 'log10', "
-            "'okapi' or 'rank_bm25'"
-        )
+    _check_idf_variant(idf_variant)
     terms = tokenize_query(query, stem=stem) if isinstance(query, str) else list(query)
     if not terms:
         # Empty result with the SAME doc_id type as the index (any id
@@ -166,42 +225,16 @@ def search(
         )
         return index.term_frequencies.sparkSession.createDataFrame([], schema)
 
-    # Manual filter-first shape (matches the reference's intent at
-    # pyapp.py:93); Catalyst pushes the isin into the parquet scan.
-    tf = index.term_frequencies.filter(F.col("word").isin(terms))
-    if idf_variant == "rank_bm25":
-        # ε-floor needs the FULL-vocab mean raw idf, so filter AFTER
-        # the table build (the mean is a broadcast scalar either way).
-        idf = rank_bm25_idf_table(index).filter(F.col("word").isin(terms))
+    defaults = (k1, b, idf_variant) == (K1_DEFAULT, B_DEFAULT, "log10")
+    if defaults and index.impacts is not None:
+        scored = index.impacts
     else:
-        idf = index.idf_values.filter(F.col("word").isin(terms))
-        if idf_variant == "okapi":
-            idf = idf.join(F.broadcast(index.scoring_params.select("n_docs"))).select(
-                "word", okapi_idf(F.col("n_docs"), F.col("doc_freq")).alias("idf")
-            )
-        else:
-            idf = idf.select("word", "idf")
-
-    params = index.scoring_params.select("avgdl")
-
-    scored = (
-        tf.join(F.broadcast(idf), "word")
-        .join(index.doc_lengths, "doc_id")
-        .crossJoin(F.broadcast(params))
-        .select(
-            "doc_id",
-            bm25_term_score(
-                F.col("term_freq"),
-                F.col("doc_length"),
-                F.col("avgdl"),
-                F.col("idf"),
-                k1=k1,
-                b=b,
-            ).alias("term_score"),
-        )
-    )
+        scored = term_scores(index, k1, b, idf_variant)
+    # Filter-first (the reference's intent at pyapp.py:93): the isin
+    # reaches the tf scan / the cached impact batches.
     return (
-        scored.groupBy("doc_id")
+        scored.filter(F.col("word").isin(terms))
+        .groupBy("doc_id")
         .agg(F.sum("term_score").alias("total_score"))
         .orderBy(F.desc("total_score"), F.asc("doc_id"))
         .limit(k)

@@ -45,6 +45,11 @@ class InvertedIndex:
     inverted_index: DataFrame    # word, doc_ids (sorted array)
     scoring_params: DataFrame    # n_docs, avgdl (single row)
     flat_words: DataFrame        # doc_id, word (token stream)
+    # word, doc_id, term_score: BM25 contributions at the default
+    # parameters, filled only by the serving layout (serve.py). Every
+    # other constructor leaves it None, so precomputed scores never
+    # outlive the idf and avgdl they were computed from.
+    impacts: DataFrame | None = None
 
     def cache(self) -> "InvertedIndex":
         for df in (
@@ -83,8 +88,9 @@ class InvertedIndex:
         )
 
     def coalesce(self, n: int) -> "InvertedIndex":
-        """Serving layout: shrink the core tables to ``n`` partitions
-        before caching. An interactive query over a cached index is
+        """Few-partition layout: shrink the core tables to ``n``
+        partitions before caching (serve.serving_layout goes further
+        and precomputes the scores). A small query over a cached index is
         task-scheduling-bound, not data-bound — at sf0.1 the default
         32-partition cache costs ~800 ms/query vs ~400 ms at 4
         partitions (measured; each of the query's stages schedules a
@@ -184,10 +190,23 @@ def build_index(
         (F.sum("doc_length") / F.count(F.lit(1))).alias("avgdl"),
     )
 
-    # df(t) from tf (already deduped to one row per (doc, word)):
-    # count(*) == countDistinct(doc_id) here, without the distinct's
-    # extra pass over the raw token stream.
-    idf_values = (
+    return InvertedIndex(
+        term_frequencies=term_frequencies,
+        doc_lengths=doc_lengths,
+        idf_values=idf_table(term_frequencies, scoring_params),
+        inverted_index=inverted_index,
+        scoring_params=scoring_params,
+        flat_words=flat_words,
+    )
+
+
+def idf_table(term_frequencies: DataFrame, scoring_params: DataFrame) -> DataFrame:
+    """(word, doc_freq, idf) with idf = log10(N / df).
+
+    df(t) comes from tf (already deduped to one row per (doc, word)):
+    count(*) == countDistinct(doc_id) here, without the distinct's
+    extra pass over the raw token stream."""
+    return (
         term_frequencies.groupBy("word")
         .agg(F.count(F.lit(1)).alias("doc_freq"))
         .crossJoin(F.broadcast(scoring_params.select("n_docs")))
@@ -196,15 +215,6 @@ def build_index(
             "doc_freq",
             F.log10(F.col("n_docs") / F.col("doc_freq")).alias("idf"),
         )
-    )
-
-    return InvertedIndex(
-        term_frequencies=term_frequencies,
-        doc_lengths=doc_lengths,
-        idf_values=idf_values,
-        inverted_index=inverted_index,
-        scoring_params=scoring_params,
-        flat_words=flat_words,
     )
 
 

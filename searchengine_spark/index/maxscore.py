@@ -38,32 +38,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from searchengine_spark.index.bm25 import bm25_term_score
+from searchengine_spark.index.bm25 import term_scores
 from searchengine_spark.index.builder import InvertedIndex
 
 MAXSCORE_K = 10
 NEG_INF = -1.0e18
-
-
-def query_term_scores(index: InvertedIndex, terms: list[str]) -> DataFrame:
-    """(word, doc_id, s): every BM25 per-term contribution for the
-    query's terms — the frame every MaxScore stage slices."""
-    tf = index.term_frequencies.filter(F.col("word").isin(list(terms)))
-    idf = index.idf_values.filter(F.col("word").isin(list(terms))).select(
-        "word", "idf"
-    )
-    return (
-        tf.join(F.broadcast(idf), "word")
-        .join(index.doc_lengths, "doc_id")
-        .crossJoin(F.broadcast(index.scoring_params.select("avgdl")))
-        .select(
-            "word",
-            "doc_id",
-            bm25_term_score(
-                F.col("term_freq"), F.col("doc_length"), F.col("avgdl"), F.col("idf")
-            ).alias("s"),
-        )
-    )
 
 
 def maxscore_topk(
@@ -75,8 +54,10 @@ def maxscore_topk(
     n_candidates, n_match_any) — the counters prove pruning happened
     (n_candidates < n_match_any) while the rows prove it stayed exact.
     """
-    ts = query_term_scores(index, terms).cache()
-    ub = ts.groupBy("word").agg(F.round(F.max("s"), 6).alias("ub"))
+    # every BM25 per-term contribution for the query's terms — the
+    # frame every MaxScore stage slices
+    ts = term_scores(index).filter(F.col("word").isin(list(terms))).cache()
+    ub = ts.groupBy("word").agg(F.round(F.max("term_score"), 6).alias("ub"))
     ow = Window.orderBy(F.desc("ub"), F.asc("word"))  # <= |terms| rows
     sw = ow.rowsBetween(Window.currentRow, Window.unboundedFollowing)
     ordered = ub.select(
@@ -93,7 +74,7 @@ def maxscore_topk(
             "left_semi",
         )
         .groupBy("doc_id")
-        .agg(F.round(F.sum("s"), 6).alias("sc"))
+        .agg(F.round(F.sum("term_score"), 6).alias("sc"))
     )
     theta = (
         p1.orderBy(F.desc("sc"), F.asc("doc_id"))
@@ -121,7 +102,7 @@ def maxscore_topk(
     final = (
         ts.join(candidates, "doc_id", "left_semi")
         .groupBy("doc_id")
-        .agg(F.round(F.sum("s"), 6).alias("total_score"))
+        .agg(F.round(F.sum("term_score"), 6).alias("total_score"))
         .orderBy(F.desc("total_score"), F.asc("doc_id"))
         .limit(k)
     )

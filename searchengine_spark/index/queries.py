@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from searchengine_spark.index.builder import build_index
-from searchengine_spark.index.bm25 import bm25_term_score, search, tfidf_search
+from searchengine_spark.index.bm25 import search, term_scores, tfidf_search
 from searchengine_spark.io import TESTDATA_DOC_VOCAB, load_table
 from searchengine_spark.text.porter import sql_stem_case_expr
 from searchengine_spark.text.tokenizer import sql_tokens_expr, tokenize_query
@@ -79,25 +79,20 @@ def q_scoring_params(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _index(spark, sf_dir).scoring_params
 
 
-def q_bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All docs matching >=1 query term, with full BM25 scores."""
-    idx = _index(spark, sf_dir)
-    terms = list(BM25_QUERY_TERMS)
-    tf = idx.term_frequencies.filter(F.col("word").isin(terms))
-    scored = (
-        tf.join(F.broadcast(idx.idf_values.filter(F.col("word").isin(terms))), "word")
-        .join(idx.doc_lengths, "doc_id")
-        .crossJoin(F.broadcast(idx.scoring_params.select("avgdl")))
-        .select(
-            "doc_id",
-            bm25_term_score(
-                F.col("term_freq"), F.col("doc_length"), F.col("avgdl"), F.col("idf")
-            ).alias("term_score"),
-        )
+def _term_set_scores(spark: SparkSession, sf_dir: str, **params) -> DataFrame:
+    """Every doc matching >=1 benchmark term, with its full BM25 score
+    under ``params`` (bm25.term_scores), rounded for the oracle."""
+    scored = term_scores(_index(spark, sf_dir), **params).filter(
+        F.col("word").isin(list(BM25_QUERY_TERMS))
     )
     return scored.groupBy("doc_id").agg(
         F.round(F.sum("term_score"), 6).alias("total_score")
     )
+
+
+def q_bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """All docs matching >=1 query term, with full BM25 scores."""
+    return _term_set_scores(spark, sf_dir)
 
 
 def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -293,31 +288,7 @@ def q_bm25_okapi_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     (df+0.5)+1) — full score set for the benchmark terms, so the
     alternate idf/constants path is oracle-checked end-to-end, not
     just golden-tested."""
-    from searchengine_spark.index.bm25 import okapi_idf
-
-    idx = _index(spark, sf_dir)
-    terms = list(BM25_QUERY_TERMS)
-    tf = idx.term_frequencies.filter(F.col("word").isin(terms))
-    idf = (
-        idx.idf_values.filter(F.col("word").isin(terms))
-        .crossJoin(F.broadcast(idx.scoring_params.select("n_docs")))
-        .select("word", okapi_idf(F.col("n_docs"), F.col("doc_freq")).alias("idf"))
-    )
-    scored = (
-        tf.join(F.broadcast(idf), "word")
-        .join(idx.doc_lengths, "doc_id")
-        .crossJoin(F.broadcast(idx.scoring_params.select("avgdl")))
-        .select(
-            "doc_id",
-            bm25_term_score(
-                F.col("term_freq"), F.col("doc_length"), F.col("avgdl"),
-                F.col("idf"), k1=OKAPI_K1,
-            ).alias("term_score"),
-        )
-    )
-    return scored.groupBy("doc_id").agg(
-        F.round(F.sum("term_score"), 6).alias("total_score")
-    )
+    return _term_set_scores(spark, sf_dir, k1=OKAPI_K1, idf_variant="okapi")
 
 
 def q_bm25_rank_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -325,27 +296,7 @@ def q_bm25_rank_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     +1 smoothing, negatives floored to eps*mean(raw idf over the full
     vocab), k1=1.5 — the published library algorithm, oracle-checked
     end-to-end (the ε-floor arithmetic included)."""
-    from searchengine_spark.index.bm25 import rank_bm25_idf_table
-
-    idx = _index(spark, sf_dir)
-    terms = list(BM25_QUERY_TERMS)
-    tf = idx.term_frequencies.filter(F.col("word").isin(terms))
-    idf = rank_bm25_idf_table(idx).filter(F.col("word").isin(terms))
-    scored = (
-        tf.join(F.broadcast(idf), "word")
-        .join(idx.doc_lengths, "doc_id")
-        .crossJoin(F.broadcast(idx.scoring_params.select("avgdl")))
-        .select(
-            "doc_id",
-            bm25_term_score(
-                F.col("term_freq"), F.col("doc_length"), F.col("avgdl"),
-                F.col("idf"), k1=OKAPI_K1,
-            ).alias("term_score"),
-        )
-    )
-    return scored.groupBy("doc_id").agg(
-        F.round(F.sum("term_score"), 6).alias("total_score")
-    )
+    return _term_set_scores(spark, sf_dir, k1=OKAPI_K1, idf_variant="rank_bm25")
 
 
 def q_tfidf_scores(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -10,11 +10,21 @@ index ONCE at startup (the reference's offline-build /
 interactive-query architecture), then answer queries from the warm
 cache — as a stdlib-only HTTP JSON endpoint and/or a terminal REPL.
 
-Serving path per query: tokenize driver-side (tiny), prune the tf
-scan with an IN-list filter, 3-way join + broadcast params, top-k via
-TakeOrderedAndProject, ONE snippet join (not the reference's N+1
-per-hit collect loop — pyapp.py:110-114), literal highlight. All
-reused from index/bm25.py; nothing here adds plan surface.
+Serving layout (serving_layout, built once at start-up): two cached
+tables hash-partitioned by doc_id into SERVING_PARTITIONS — the impact
+table (word, doc_id, term_score), every posting's BM25 contribution
+at the default parameters, and the snippet table (doc_id, snippet),
+one truncated text per doc.
+
+Serving path per query: tokenize driver-side (tiny), filter the
+impact table by the query terms, sum per doc with no exchange (the
+table is already partitioned by doc_id), top-k via
+TakeOrderedAndProject, then hash only those k hits into the snippet
+table's partitioning and join (not the reference's N+1 per-hit
+collect loop — pyapp.py:110-114; no corpus scan or text shuffle per
+request), literal highlight. Scoring and highlighting are
+index/bm25.py's; calls with non-default BM25 parameters fall back to
+its lazy tf⋈idf⋈doc_lengths path.
 
 Usage:
     python -m searchengine_spark.serve --sf-dir /root/testdata/sf0.01 --port 8765
@@ -24,14 +34,66 @@ Usage:
 from __future__ import annotations
 
 import json
+from dataclasses import replace
 from typing import Any
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from searchengine_spark.index.bm25 import term_scores
+from searchengine_spark.index.builder import InvertedIndex
 
 # Upper bound on requested result-list size for both HTTP endpoints:
 # k drives a post-limit collect, so an unbounded k is an unbounded
 # driver materialization — clamp, don't trust the client.
 MAX_K = 100
+# Partitions of the cached serving tables: an interactive query is
+# task-scheduling-bound, not data-bound (kilobytes of hits per task),
+# so a few partitions per serving executor keep it cheap.
+SERVING_PARTITIONS = 4
+
+
+def serving_layout(
+    index: InvertedIndex, docs: DataFrame, *, snippet_len: int
+) -> tuple[InvertedIndex, DataFrame]:
+    """(serving index, snippet table), both cached and built by one
+    action.
+
+    - ``impacts`` (word, doc_id, term_score): every posting's BM25
+      contribution at the default parameters (bm25.term_scores),
+      hash-partitioned by doc_id into SERVING_PARTITIONS, so search()'s
+      per-doc sum needs no exchange.
+    - snippet table (doc_id, snippet): one row per doc, partitioned
+      like the impacts. Duplicate doc_ids keep min(text), the rule
+      bm25.snippets() applies; truncating before the min picks the
+      same prefix (a prefix of the least string is the least prefix),
+      so a shuffle of the rows moves only ``snippet_len`` characters.
+
+    Only what requests read stays cached: the impacts, the snippets,
+    idf_values (the fuzzy path's vocabulary) and scoring_params; the
+    rest of the index stays lazy for calls the impacts cannot answer.
+    With ``docs`` hash-partitioned by doc_id into SERVING_PARTITIONS and
+    the index built from them (as SearchService does), tf, the broadcast
+    joins of term_scores and the snippet rows all keep that
+    partitioning, and both repartitions below are no-ops; otherwise
+    they shuffle."""
+    n = SERVING_PARTITIONS
+    served = replace(
+        index,
+        idf_values=index.idf_values.coalesce(n).cache(),
+        scoring_params=index.scoring_params.cache(),
+    )
+    impacts = term_scores(served).repartition(n, "doc_id").cache()
+    snips = (
+        docs.select("doc_id", F.substring("text", 1, snippet_len).alias("snippet"))
+        .repartition(n, "doc_id")
+        .groupBy("doc_id")
+        .agg(F.min("snippet").alias("snippet"))
+        .cache()
+    )
+    # one action builds both tables and the idf/params caches they read
+    snips.select("doc_id").union(impacts.select("doc_id")).count()
+    return replace(served, impacts=impacts), snips
 
 
 class SearchService:
@@ -51,34 +113,40 @@ class SearchService:
 
         self._spark = spark
         self._stem = stem
-        self._snippet_len = snippet_len
         self._multilingual = multilingual
-        self._docs = load_table(spark, sf_dir, "documents")
-        # Serving cache at few partitions: interactive queries are
-        # task-scheduling-bound (see InvertedIndex.coalesce) — 2x
-        # lower per-query latency than the build-parallel layout.
-        if multilingual:
-            if stem:
-                raise ValueError(
-                    "stem applies to the English Porter pipeline; the "
-                    "multilingual index routes per-language instead"
-                )
-            # Language-routed index (text/multilingual.py): NFC +
-            # langid + per-language stopwords + CJK bigrams. Snippets
-            # still render from the ORIGINAL text — normalization is
-            # a matching key, not a display rewrite.
-            from pyspark.sql import functions as F
-
-            from searchengine_spark.text.multilingual import routed_frame
-
-            routed = routed_frame(self._docs).select("doc_id", "words")
-            self._index = (
-                build_index(routed, tokens=F.col("words"))
-                .coalesce(4)
-                .cache()
+        if multilingual and stem:
+            raise ValueError(
+                "stem applies to the English Porter pipeline; the "
+                "multilingual index routes per-language instead"
             )
-        else:
-            self._index = build_index(self._docs, stem=stem).coalesce(4).cache()
+        # Partitioned like the serving tables and cached for the build
+        # only: tokens, tf, doc_lengths, impacts and snippets all keep
+        # this partitioning, so set-up shuffles the corpus once.
+        docs = (
+            load_table(spark, sf_dir, "documents")
+            .repartition(SERVING_PARTITIONS, "doc_id")
+            .cache()
+        )
+        try:
+            if multilingual:
+                # Language-routed index (text/multilingual.py): NFC +
+                # langid + per-language stopwords + CJK bigrams. Snippets
+                # still render from the ORIGINAL text — normalization is
+                # a matching key, not a display rewrite.
+                from searchengine_spark.text.multilingual import routed_frame
+
+                routed = routed_frame(docs).select("doc_id", "words")
+                index = build_index(routed, tokens=F.col("words"))
+            else:
+                index = build_index(docs, stem=stem)
+            # Built before the first user query, so first-hit latency is
+            # query cost, not index build (the reference pays its 1-2 min
+            # cold start inside the first Streamlit interaction).
+            self._index, self._snippets = serving_layout(
+                index, docs, snippet_len=snippet_len
+            )
+        finally:
+            docs.unpersist()
         # embeddings power /similar; optional in custom datasets
         import os
 
@@ -87,12 +155,18 @@ class SearchService:
         self._emb = None
         if os.path.exists(table_path(sf_dir, "embeddings")):
             self._emb = (
-                load_table(spark, sf_dir, "embeddings").coalesce(4).cache()
+                load_table(spark, sf_dir, "embeddings")
+                .coalesce(SERVING_PARTITIONS)
+                .cache()
             )
-        # Materialize the cache before the first user query so first-hit
-        # latency is query cost, not index build (the reference pays its
-        # 1-2 min cold start inside the first Streamlit interaction).
-        self._index.scoring_params.collect()
+
+    def _with_snippets(self, hits: DataFrame) -> DataFrame:
+        """Each hit joined to its cached snippet row. The hint makes the
+        k hits the hashed build side: they are shuffled into the
+        snippet table's doc_id partitioning, which is neither shuffled
+        nor broadcast (by size alone Spark would broadcast the whole
+        table on every request). The hits' order is not kept."""
+        return hits.hint("shuffle_hash").join(self._snippets, "doc_id", "left")
 
     def query(
         self, q: str, k: int = 10, *, fuzzy: bool = False
@@ -103,7 +177,7 @@ class SearchService:
         replaced by their closest in-vocabulary suggestion (distance
         then doc_freq) before scoring — typo tolerance the reference
         lacks (its unknown terms silently contribute nothing)."""
-        from searchengine_spark.index.bm25 import highlight, search, snippets
+        from searchengine_spark.index.bm25 import highlight, search
 
         highlight_terms = [q]
         if self._multilingual:
@@ -139,21 +213,17 @@ class SearchService:
             ]
         else:
             hits = search(self._index, q, k=k, stem=self._stem)
-        rows = (
-            highlight(
-                snippets(hits, self._docs, max_len=self._snippet_len),
-                "snippet",
-                highlight_terms,
-            )
-            .collect()  # k rows, post-limit — the only driver collect
-        )
+        # k rows, post-limit — the only driver collect
+        rows = highlight(
+            self._with_snippets(hits), "snippet", highlight_terms
+        ).collect()
         return [
             {
                 "doc_id": r["doc_id"],
                 "total_score": round(float(r["total_score"]), 6),
                 "snippet": r["snippet"],
             }
-            for r in rows
+            for r in _by_score(rows, "total_score")
         ]
 
 
@@ -166,9 +236,7 @@ class SearchService:
         serving shape at cached-table scale; at 100 TB swap the
         semantic list for the IVF probe (operators/ann.py) — the
         fusion contract is rank lists, so nothing else changes."""
-        from pyspark.sql import functions as F
-
-        from searchengine_spark.index.bm25 import search, snippets
+        from searchengine_spark.index.bm25 import search
         from searchengine_spark.index.hybrid import FUSE_N, _ranked, rrf_fuse
         from searchengine_spark.operators.similarity import cosine_expr
 
@@ -204,19 +272,21 @@ class SearchService:
             .orderBy(F.desc("rrf_score"), F.asc("doc_id"))
             .limit(k)
         )
-        rows = snippets(
-            fused.withColumn("total_score", F.col("rrf_score")),
-            self._docs,
-            max_len=self._snippet_len,
-        ).collect()
+        rows = self._with_snippets(fused).collect()
         return [
             {
                 "doc_id": r["doc_id"],
-                "rrf_score": round(float(r["total_score"]), 6),
+                "rrf_score": round(float(r["rrf_score"]), 6),
                 "snippet": r["snippet"],
             }
-            for r in rows
+            for r in _by_score(rows, "rrf_score")
         ]
+
+
+def _by_score(rows: list, score: str) -> list:
+    """Collected hits in result order — score desc, doc_id asc — since
+    the snippet join does not keep the order of the ranked frame."""
+    return sorted(rows, key=lambda r: (-r[score], r["doc_id"]))
 
 
 def make_http_server(service: SearchService, port: int = 0):

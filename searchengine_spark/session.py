@@ -51,6 +51,11 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", "128m")
+        # TakeOrderedAndProject preallocates 2 * limit slots per task,
+        # so an orderBy().limit(n) with n near 1e9 ("keep everything")
+        # fails the heap and takes the JVM down; above this limit Spark
+        # sorts and then limits instead.
+        .config("spark.sql.execution.topKSortFallbackThreshold", "1000000")
         # Python DataSource API: let custom sources (sources/jsonl.py)
         # receive planner filters via pushFilters.
         .config("spark.sql.python.filterPushdown.enabled", "true")

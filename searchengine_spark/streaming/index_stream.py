@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from searchengine_spark.index.builder import InvertedIndex
+from searchengine_spark.index.builder import InvertedIndex, idf_table
 from searchengine_spark.text.tokenizer import tokens_column
 
 
@@ -113,23 +113,13 @@ def read_incremental_index(spark: SparkSession, out_dir: str) -> InvertedIndex:
         F.count(F.lit(1)).alias("n_docs"),
         (F.sum("doc_length") / F.count(F.lit(1))).alias("avgdl"),
     )
-    idf = (
-        tf.groupBy("word")
-        .agg(F.count(F.lit(1)).alias("doc_freq"))
-        .crossJoin(F.broadcast(params.select("n_docs")))
-        .select(
-            "word",
-            "doc_freq",
-            F.log10(F.col("n_docs") / F.col("doc_freq")).alias("idf"),
-        )
-    )
     inverted = tf.groupBy("word").agg(
         F.sort_array(F.collect_list("doc_id")).alias("doc_ids")
     )
     return InvertedIndex(
         term_frequencies=tf,
         doc_lengths=dl,
-        idf_values=idf,
+        idf_values=idf_table(tf, params),
         inverted_index=inverted,
         scoring_params=params,
         flat_words=tf.select("doc_id", "word"),

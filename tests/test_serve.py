@@ -7,7 +7,11 @@ import sys
 import threading
 import urllib.request
 
+import pytest
+
 sys.path.insert(0, "/root/repo")
+
+pytestmark = pytest.mark.smoke
 
 
 def _get(port, path):
